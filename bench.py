@@ -366,8 +366,11 @@ def _load_compact_cohort() -> list[str]:
 
 def _compact_line(result: dict, timings: dict[str, float], limit: int = 1600) -> dict:
     """Summary + the frozen cohort + top-slowest queries, trimmed so the
-    JSON line fits ``limit`` (cohort first; if even the cohort overflows
-    the guard, its fastest entries are trimmed — guard wins)."""
+    JSON line fits ``limit``. ``queries`` is two blocks, each sorted
+    slowest-first: the cohort entries, then the slowest non-cohort
+    fill. If even the cohort overflows the guard, its entries that do
+    not fit are trimmed (guard wins) and ``cohort_dropped`` counts
+    them."""
     base = {
         "metric": result["metric"],
         "value": result["value"],
@@ -401,16 +404,20 @@ def _compact_line(result: dict, timings: dict[str, float], limit: int = 1600) ->
     ordered = [kv for kv in by_cost if kv[0] in cohort] + [
         kv for kv in by_cost if kv[0] not in cohort
     ]
+    dropped = 0
     for name, dt in ordered:
-        candidate = dict(base["queries"])
-        candidate[name] = round(dt, 2)
-        trial = dict(base)
-        trial["queries"] = candidate
-        if len(json.dumps(trial, separators=(",", ":"))) >= limit:
+        trial = dict(base, queries={**base["queries"], name: round(dt, 2)})
+        # a cohort entry must leave room for the count of trimmed ones
+        probe = (
+            dict(trial, cohort_dropped=len(cohort)) if name in cohort else trial
+        )
+        if len(json.dumps(probe, separators=(",", ":"))) >= limit:
             if name in cohort:
+                dropped += 1
+                base["cohort_dropped"] = dropped
                 continue  # keep trying: later cohort names are shorter
             break
-        base["queries"] = candidate
+        base = trial
     return base
 
 

@@ -34,12 +34,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    """Euclidean distance in double precision."""
-    diffs = F.zip_with(to_double_array(a), to_double_array(b), lambda x, y: x - y)
-    return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
 def quantize_int8(col: Column) -> Column:
     """Symmetric per-vector int8 quantization: ARRAY<FLOAT/DOUBLE> →
     ARRAY<TINYINT> with ``q_i = round(x_i · 127 / max_j|x_j|)``

@@ -94,22 +94,3 @@ def asof_join_union(
     return carried.filter(F.col("_side") == 1).select(
         "_l.*", *[f"asof_{v}" for v in value_cols]
     )
-
-
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_time: str,
-    right_time: str,
-    lower: Column,
-    upper: Column,
-) -> DataFrame:
-    """Interval/overlap join: equi-key + bounded time window. Stays a
-    sort-merge join on the key; the band predicate filters post-match."""
-    cond = (
-        (left[on] == right[on])
-        & (right[right_time] >= left[left_time] + lower)
-        & (right[right_time] <= left[left_time] + upper)
-    )
-    return left.join(right, cond)

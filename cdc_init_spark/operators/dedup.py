@@ -197,21 +197,6 @@ def shingle_sets(
 
 # --- MinHash + LSH banding (L2) ------------------------------------------
 
-def minhash_signature(shingles: Column, k: int = 128) -> Column:
-    """k-wide MinHash signature as a single Column (per permutation i:
-    min over shingles of the seeded hash xxhash64(h, i) — reseeding a
-    64-bit hash is the standard stand-in for a random permutation).
-
-    NOTE: this Column form evaluates through interpreted higher-order
-    lambdas; the bulk pipelines (lsh_band_buckets) use the equivalent
-    explode + hash-aggregate shape instead, which stays in whole-stage
-    codegen and is ~100× faster. Same signature values either way."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        lambda i: F.array_min(F.transform(shingles, lambda h: F.xxhash64(h, i))),
-    )
-
-
 def lsh_band_buckets(
     df: DataFrame,
     text_col: str = "text",
@@ -296,32 +281,6 @@ def minhash_candidate_pairs(
 
 
 # --- exact verification: n-gram Jaccard (L6) ------------------------------
-
-def jaccard_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Verify candidate pairs with exact shingle-set Jaccard. Joins the
-    (small) candidate relation to per-doc shingle arrays twice — shuffles
-    on the doc id, never pairs the full corpus."""
-    sh = shingle_sets(df, text_col, id_col, n)
-    out = (
-        pairs.join(sh.withColumnRenamed(id_col, "a").withColumnRenamed("_sh", "_sa"), on="a")
-        .join(sh.withColumnRenamed(id_col, "b").withColumnRenamed("_sh", "_sb"), on="b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("_sa", "_sb"))
-            / F.size(F.array_union("_sa", "_sb")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
-    return out
-
 
 def ngram_jaccard_neighbors(
     df: DataFrame,
@@ -967,12 +926,6 @@ def fold_simhash(votes: Column, bits: int = 64) -> Column:
             )
         )
     return sig
-
-
-def simhash64(col: Column, n: int = 3, bits: int = 64) -> Column:
-    """One-shot 64-bit SimHash column (convenience; for bulk use prefer
-    simhash_signatures, which stays in whole-stage codegen)."""
-    return fold_simhash(simhash_votes(col, n, bits), bits)
 
 
 def simhash_signatures(

@@ -24,7 +24,6 @@ import numpy as np
 import pandas as pd
 from cdc_init_spark.functions.parallelism import widen
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -55,55 +54,12 @@ MEDIA_SCHEMA = StructType(
 )
 
 
-def read_binary_files(spark, path: str, glob: str = "*") -> DataFrame:
-    """Ingest blobs via Spark's binaryFile source → MEDIA_SCHEMA shape."""
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-    )
-    return raw.select(
-        F.xxhash64("path").alias("media_id"),
-        F.col("content"),
-        F.struct(
-            F.lit(None).cast("string").alias("mime"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("long").alias("duration_ms"),
-            F.lit(None).cast("string").alias("codec"),
-        ).alias("meta"),
-    )
-
-
 def _fake_decode_image(content: bytes) -> np.ndarray:
     """Deterministic stand-in for a real image decoder: expands the bytes
     into a pseudo-pixel array seeded by their crc32. Real deployments
     replace this via DECODERS['image']."""
     rng = np.random.default_rng(zlib.crc32(content or b""))
     return rng.integers(0, 256, size=(8, 8, 3), dtype=np.uint8)
-
-
-def _real_decode_image(content: bytes) -> np.ndarray:
-    """Real image decode. PNG and JPEG (baseline + progressive) are
-    handled by the
-    stdlib+numpy decoders in operators/codecs.py (no Pillow needed);
-    other formats use Pillow when available."""
-    from cdc_init_spark.operators import codecs
-
-    if codecs.is_png(content):
-        return codecs.decode_png(content)
-    if codecs.is_jpeg(content):
-        return codecs.decode_jpeg(content)
-    try:
-        import io
-
-        from PIL import Image  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "non-PNG/JPEG image decoding requires Pillow, which is not "
-            "installed in this environment"
-        ) from e
-    return np.asarray(Image.open(io.BytesIO(content)))
 
 
 def _decode_image(content: bytes) -> np.ndarray:
@@ -279,20 +235,6 @@ def _fake_decode_audio(content: bytes, sample_rate: int = 16_000) -> np.ndarray:
     rng = np.random.default_rng(zlib.crc32(content or b""))
     n = sample_rate + int(zlib.crc32(b"len" + (content or b"")) % sample_rate)
     return rng.integers(-(2**15), 2**15, size=n, dtype=np.int16)
-
-
-def _real_decode_audio(content: bytes) -> np.ndarray:
-    """Real audio decode: WAV/PCM via the stdlib ``wave`` codec
-    (operators/codecs.py). Compressed formats (mp3/ogg/flac) would need
-    ffmpeg/soundfile, not present in this container."""
-    from cdc_init_spark.operators import codecs
-
-    if codecs.is_wav(content):
-        return codecs.decode_wav(content)
-    raise NotImplementedError(
-        "compressed-audio decoding requires ffmpeg/soundfile, not installed "
-        "in this environment (WAV decodes for real via operators/codecs.py)"
-    )
 
 
 def _decode_audio(content: bytes) -> np.ndarray:

@@ -1,12 +1,12 @@
 """DeltaLogFormat — a log-structured, Delta-protocol-shaped ACID table
 format (VERDICT r5 "What's missing" item 2 made real).
 
-``VersionedParquetFormat`` (table_format.py) satisfies the TableFormat
-contract by COPYING every table per version — O(table) per commit, which
-is exactly what dies at 100 TB (a 100 TB base snapshot cannot be
-rewritten every micro-batch). This module implements the same contract
-the way production lakehouse formats do (the public Delta Lake protocol
-spec, delta.io PROTOCOL.md; Iceberg's spec is the same shape):
+The engine's one TableFormat (table_format.py). A format that COPIES
+every table per version costs O(table) per commit, which is exactly
+what dies at 100 TB (a 100 TB base snapshot cannot be rewritten every
+micro-batch). This module implements the contract the way production
+lakehouse formats do (the public Delta Lake protocol spec, delta.io
+PROTOCOL.md; Iceberg's spec is the same shape):
 
 - **Immutable data files + an action log.** Data parquet files are
   written once and never mutated; each commit is one atomically-created
@@ -22,7 +22,10 @@ spec, delta.io PROTOCOL.md; Iceberg's spec is the same shape):
   and retry at the next version. Multiple writers can append
   concurrently with zero coordination beyond the filesystem — the same
   guarantee Delta gets from atomic-rename/put-if-absent on the object
-  store.
+  store. Every staged DML write (merge, delete/update, multi-table
+  transaction) lands through one commit-and-retry helper
+  (``_commit_staged``), so the exactly-once argument rests on one
+  function.
 - **Checkpoints.** Every ``checkpoint_interval`` commits, the replayed
   state is written as ``_log/{v:020d}.checkpoint.parquet`` (columnar —
   at millions of files the checkpoint is scanned, not parsed) plus a
@@ -73,10 +76,9 @@ spec, delta.io PROTOCOL.md; Iceberg's spec is the same shape):
   lossy promotions are refused.
 
 The TableFormat contract (atomic visibility, batch-id replay
-idempotence, monotonic versions) is proven by running the SAME pytest
-suite the versioned-parquet implementation passes (tests/test_apply.py
-parametrizes over both), so the continuous-aggregate pipeline
-(streaming/apply.py) runs through this format unchanged.
+idempotence, monotonic versions) is pinned by tests/test_apply.py, and
+the continuous-aggregate pipeline (streaming/apply.py) writes through
+this format: a path given there opens a DeltaLogFormat.
 
 Reference parity note: the reference stores state in compacted Kafka
 topics (components/topic_store.clj:13-16, one consumer per topic); this
@@ -387,10 +389,12 @@ def _uri_to_local(uri: str) -> str:
 
 
 def _file_intersects_ranges(stats: dict, ranges: dict[str, list[tuple]]) -> bool:
-    """Conservative per-file test: keep the file unless SOME column's
-    key-range cover is provably disjoint from the file's footer
-    [min,max]. Missing stats or incomparable forms → keep (the exact
-    semi-join decides)."""
+    """Conservative per-file test — the one file-skipping kernel of
+    merge planning, predicate DML and ``read_where_all``: keep the file
+    unless SOME column's range cover is provably disjoint from the
+    file's footer [min,max]. A range end of None is open. Missing stats
+    or incomparable forms → keep (the exact probe or residual filter
+    decides)."""
     for c, cover in ranges.items():
         if not cover:
             return False  # no non-null change keys for this pk column
@@ -401,7 +405,10 @@ def _file_intersects_ranges(stats: dict, ranges: dict[str, list[tuple]]) -> bool
         hit = False
         for klo, khi in cover:
             try:
-                if not (fmax < klo or fmin > khi):
+                if not (
+                    (klo is not None and fmax < klo)
+                    or (khi is not None and fmin > khi)
+                ):
                     hit = True
                     break
             except TypeError:
@@ -1053,27 +1060,21 @@ class DeltaLogFormat(TableFormat):
             except OSError:
                 pass
 
-    def _write_cdc_files(
-        self,
-        table: str,
-        df: DataFrame,
-        mapping: dict[str, str] | None = None,
-    ) -> list[dict]:
-        """Persist a commit's change-data frame (pk + type + data cols,
-        the diff_snapshots vocabulary) as immutable parquet under
-        ``_cdc/{table}`` — version-independent unique names, so a lost
-        commit race can retry with the SAME files (the change content is
-        defined by the transaction, not by the version it lands at).
-
-        Table columns are stored under their stable PHYSICAL names
-        (``type`` is DML metadata, never a table column, so it rides
-        through identity): change files written before and after a
-        rename agree on disk, and readers rename to their own pin's
-        logical vocabulary."""
-        tdir = os.path.join(self.cdc_dir, table)
+    def _write_side_files(
+        self, base_dir: str, table: str, df: DataFrame, prefix: str
+    ) -> list[str]:
+        """Write ``df`` through a staging dir and move its non-empty
+        parquet parts to ``{base_dir}/{table}`` under fresh unique names
+        — version-independent, so a lost commit race can retry with the
+        SAME files. Returns their ``{table}/...`` paths. A commit's
+        change-data (``_cdc``) and delete-key (``_dv``) files are
+        written this way."""
+        tdir = os.path.join(base_dir, table)
         os.makedirs(tdir, exist_ok=True)
-        staging = os.path.join(self.root, f"_staging-cdc-{uuid.uuid4().hex}")
-        self._to_physical(df, mapping or {}).write.parquet(staging)
+        staging = os.path.join(
+            self.root, f"_staging-{prefix}-{uuid.uuid4().hex}"
+        )
+        df.write.parquet(staging)
         out = []
         for name in sorted(os.listdir(staging)):
             if not name.endswith(".parquet"):
@@ -1081,16 +1082,9 @@ class DeltaLogFormat(TableFormat):
             src = os.path.join(staging, name)
             if _file_stats(src)["rows"] == 0:
                 continue
-            final = f"cdc-{uuid.uuid4().hex}.parquet"
-            dst = os.path.join(tdir, final)
-            os.replace(src, dst)
-            # size rides along so the streaming source can plan
-            # byte-capped batches without stat-ing every file per trigger
-            out.append({
-                "table": table,
-                "path": f"{table}/{final}",
-                "size": os.path.getsize(dst),
-            })
+            final = f"{prefix}-{uuid.uuid4().hex}.parquet"
+            os.replace(src, os.path.join(tdir, final))
+            out.append(f"{table}/{final}")
         shutil.rmtree(staging)
         return out
 
@@ -1101,27 +1095,48 @@ class DeltaLogFormat(TableFormat):
             except OSError:
                 pass
 
-    def _write_dv_files(self, table: str, keys: DataFrame) -> list[str]:
-        """Persist a merge-on-read commit's delete-key set (the pk
-        columns of every touched key) as immutable parquet under
-        ``_dv/{table}`` — the equality-delete files the read path
-        anti-joins against the files the commit's ``dv`` action names."""
-        tdir = os.path.join(self.dv_dir, table)
-        os.makedirs(tdir, exist_ok=True)
-        staging = os.path.join(self.root, f"_staging-dv-{uuid.uuid4().hex}")
-        keys.write.parquet(staging)
-        out = []
-        for name in sorted(os.listdir(staging)):
-            if not name.endswith(".parquet"):
-                continue
-            src = os.path.join(staging, name)
-            if _file_stats(src)["rows"] == 0:
-                continue
-            final = f"dv-{uuid.uuid4().hex}.parquet"
-            os.replace(src, os.path.join(tdir, final))
-            out.append(f"{table}/{final}")
-        shutil.rmtree(staging)
-        return out
+    def _capture_cdc(
+        self,
+        table: str,
+        old_rows: DataFrame,
+        new_rows: DataFrame,
+        pk_cols: list[str],
+        mapping: dict[str, str] | None,
+    ) -> tuple[list[dict], list[dict]]:
+        """Change-data capture for one table of a commit: diff the old
+        state of the rewritten region against its new, COMMITTED bytes
+        (so the feed matches what readers see even when the input frame
+        is non-deterministic), persist the diff (pk + type + data cols,
+        the diff_snapshots vocabulary) under ``_cdc/{table}``, and
+        return (cdc file adds, log actions). The ``cdcMeta`` marker is
+        present even when the diff is empty, so a stream reader can tell
+        "no logical change" from "CDF not captured"; its ``pk_cols``
+        record the key vocabulary the diff was taken under.
+
+        Table columns are stored under their stable PHYSICAL names
+        (``type`` is DML metadata, never a table column, so it rides
+        through identity): change files written before and after a
+        rename agree on disk, and readers rename to their own pin's
+        logical vocabulary."""
+        from cdc_init_spark.streaming.apply import diff_snapshots
+
+        diff = diff_snapshots(old_rows, new_rows, pk_cols)
+        paths = self._write_side_files(
+            self.cdc_dir, table, self._to_physical(diff, mapping or {}), "cdc"
+        )
+        # size rides along so the streaming source can plan byte-capped
+        # batches without stat-ing every file per trigger
+        cdc_adds = [
+            {
+                "table": table,
+                "path": p,
+                "size": os.path.getsize(os.path.join(self.cdc_dir, p)),
+            }
+            for p in paths
+        ]
+        actions = [{"cdcMeta": {"table": table, "pk_cols": pk_cols}}]
+        actions.extend({"cdc": a} for a in cdc_adds)
+        return cdc_adds, actions
 
     def _abandon_dv(self, dv_paths: list[str]) -> None:
         for p in dv_paths:
@@ -1133,14 +1148,14 @@ class DeltaLogFormat(TableFormat):
     @staticmethod
     def _meta_action(
         table: str,
-        df: DataFrame,
+        schema: StructType,
         partition_cols: list[str] | None = None,
         mapping: dict[str, str] | None = None,
         retired: list[str] | None = None,
     ) -> dict:
         m: dict = {
             "table": table,
-            "schema_json": df.schema.json(),
+            "schema_json": schema.json(),
             "partition_cols": partition_cols or [],
         }
         # column-mapping state rides every metaData refresh — omitted
@@ -1150,6 +1165,37 @@ class DeltaLogFormat(TableFormat):
         if retired:
             m["retired_physical"] = sorted(retired)
         return {"metaData": m}
+
+    def _overwrite_actions(
+        self,
+        snap: _Snapshot,
+        table: str,
+        df: DataFrame,
+        spec: list[str] | None,
+        mapping: dict[str, str],
+        retired: list[str],
+        adds: list[dict],
+    ) -> list[dict]:
+        """Actions of a full overwrite of ``table`` against ``snap``: a
+        metaData refresh when the table is new or its schema or
+        partition spec changes (an overwrite retires every old file, so
+        even a breaking schema change is safe), a remove for every
+        active file, then the new adds."""
+        actions: list[dict] = []
+        if (
+            table not in snap.schemas
+            or self._schema_change(snap.schemas[table], df)
+            or (spec or []) != (snap.partition_cols.get(table) or [])
+        ):
+            actions.append(
+                self._meta_action(table, df.schema, spec, mapping, retired)
+            )
+        actions.extend(
+            {"remove": {"table": table, "path": p}}
+            for p in snap.adds.get(table, {})
+        )
+        actions.extend({"add": a} for a in adds)
+        return actions
 
     @staticmethod
     def _physicalize(schema: StructType, mapping: dict[str, str]) -> StructType:
@@ -1269,7 +1315,7 @@ class DeltaLogFormat(TableFormat):
         actions: list[dict] = [{"commitInfo": {"operation": "init"}}]
         for name, df in tables.items():
             spec = partition_by.get(name)
-            actions.append(self._meta_action(name, df, spec))
+            actions.append(self._meta_action(name, df.schema, spec))
             actions.extend(
                 {"add": a} for a in self._write_data_files(name, df, spec)
             )
@@ -1286,10 +1332,9 @@ class DeltaLogFormat(TableFormat):
     ) -> bool:
         """Overwrite-commit: the given tables' full new contents become
         the next version (removes for every previously-active file of
-        those tables + adds for the new ones). Still O(written-data) in
-        IO — the win over VersionedParquetFormat is that tables NOT in
-        this commit are untouched, and ``append``/``merge`` below give
-        the O(delta) paths.
+        those tables + adds for the new ones). O(written-data) in IO;
+        tables NOT in this commit are untouched, and ``append``/``merge``
+        below give the O(delta) paths.
 
         ``partition_by`` re-specs a table's partition layout — safe only
         here, because an overwrite retires every old file, so no mixed-
@@ -1344,8 +1389,6 @@ class DeltaLogFormat(TableFormat):
             if self.enable_cdf and cdc_pk_cols:
                 # recomputed per attempt: a lost race changes the old
                 # state the diff is taken against
-                from cdc_init_spark.streaming.apply import diff_snapshots
-
                 self._abandon_cdc(cdc_files)
                 cdc_files = []
                 for name, df in tables.items():
@@ -1370,34 +1413,18 @@ class DeltaLogFormat(TableFormat):
                         spark, name, new_adds[name], df.schema,
                         maps_used[name][0],
                     ).select(*old_state.columns)
-                    files = self._write_cdc_files(
-                        name, diff_snapshots(old_state, new_state, pks),
-                        maps_used[name][0],
+                    files, cdc_actions = self._capture_cdc(
+                        name, old_state, new_state, pks, maps_used[name][0]
                     )
                     cdc_files.extend(files)
-                    actions.append(
-                        {"cdcMeta": {"table": name, "pk_cols": pks}}
-                    )
-                    actions.extend({"cdc": f} for f in files)
+                    actions.extend(cdc_actions)
             for name, df in tables.items():
-                # overwrite retires every old file, so even a breaking
-                # schema change is safe here — refresh metaData when the
-                # schema OR the partition spec changes
-                if (
-                    name not in snap.schemas
-                    or self._schema_change(snap.schemas[name], df)
-                    or (specs_used[name] or [])
-                    != (snap.partition_cols.get(name) or [])
-                ):
-                    actions.append(
-                        self._meta_action(
-                            name, df, specs_used[name],
-                            maps_used[name][0], maps_used[name][1],
-                        )
+                actions.extend(
+                    self._overwrite_actions(
+                        snap, name, df, specs_used[name], *maps_used[name],
+                        new_adds[name],
                     )
-                for p in snap.adds.get(name, {}):
-                    actions.append({"remove": {"table": name, "path": p}})
-                actions.extend({"add": a} for a in new_adds[name])
+                )
             actions.append({"txn": {"batch_id": batch_id}})
             version = snap.version + 1
             if self._try_write_commit(version, actions):
@@ -1632,7 +1659,7 @@ class DeltaLogFormat(TableFormat):
                 )
             actions: list[dict] = [{"commitInfo": {"operation": "append"}}]
             if table not in snap.schemas:
-                actions.append(self._meta_action(table, df))
+                actions.append(self._meta_action(table, df.schema))
             else:
                 change = self._schema_change(snap.schemas[table], df)
                 if change == "breaking":
@@ -1647,7 +1674,7 @@ class DeltaLogFormat(TableFormat):
                 if change == "additive":
                     actions.append(
                         self._meta_action(
-                            table, df, snap.partition_cols.get(table),
+                            table, df.schema, snap.partition_cols.get(table),
                             mapping_used, retired_used,
                         )
                     )
@@ -1714,7 +1741,9 @@ class DeltaLogFormat(TableFormat):
         Law (pytest): read-after-merge ≡ apply_changes(read-before, changes).
         Raises CommitConflictError if a concurrent commit changed the
         table's file set after planning (re-run against the new state).
-        Returns the committed version, or -1 for a replayed batch_id.
+        Returns the committed version, or -1 for a replayed batch_id —
+        also when a concurrent commit carrying the same or a higher
+        batch_id wins the race (the staged files are abandoned).
         """
         if strategy not in ("cow", "mor"):
             raise ValueError(f"unknown merge strategy {strategy!r}")
@@ -1725,30 +1754,65 @@ class DeltaLogFormat(TableFormat):
             spark, snap, table, changes, pk_cols, order_col, type_col,
             strategy, evolve_schema,
         )
-        actions: list[dict] = [
-            {"commitInfo": {"operation": "merge" if strategy == "cow"
-                            else "merge-mor"}},
-            *staged["actions"],
+        return self._commit_staged(
+            spark, snap, "merge" if strategy == "cow" else "merge-mor",
+            [table], [staged], batch_id,
+        )
+
+    def _commit_staged(
+        self,
+        spark: SparkSession,
+        snap: _Snapshot,
+        operation: str,
+        tables: list[str],
+        staged: list[dict],
+        batch_id: int | None,
+    ) -> int:
+        """The one optimistic-concurrency commit of every staged DML
+        write (merge, delete/update, multi-table transaction): land the
+        staged actions as ONE version at ``snap.version + 1``. On a lost
+        race, re-read the log: a winner carrying the same or a higher
+        ``batch_id`` already holds this batch (abandon, return -1); a
+        winner that left every staged table's read set intact touched
+        other tables only (retry once at the next version); anything
+        else invalidated the plan (abandon, raise CommitConflictError).
+        Returns the committed version, or -1 for a replayed batch."""
+
+        def abandon() -> None:
+            for s in staged:
+                self._abandon_staged(s)
+
+        if batch_id is not None and batch_id <= snap.last_batch_id:
+            abandon()
+            return -1
+        actions: list[dict] = [{"commitInfo": {"operation": operation}}]
+        for s in staged:
+            actions.extend(s["actions"])
+        actions.append(
             {"txn": {"batch_id": batch_id if batch_id is not None
-                     else snap.last_batch_id}},
-        ]
-        if not self._try_write_commit(snap.version + 1, actions):
+                     else snap.last_batch_id}}
+        )
+        version = snap.version + 1
+        if not self._try_write_commit(version, actions):
             cur = self._snapshot()
-            if self._table_read_set(cur, table) == self._table_read_set(
-                snap, table
-            ) and (batch_id is None or batch_id > cur.last_batch_id):
-                # winner touched other tables only: our read set is intact
-                if self._try_write_commit(cur.version + 1, actions):
-                    self._maybe_checkpoint(cur.version + 1)
-                    self._maybe_auto_compact(spark, table)
-                    return cur.version + 1
-            self._abandon_staged(staged)
-            raise CommitConflictError(
-                f"concurrent commit changed {table!r}; re-run merge"
+            if batch_id is not None and batch_id <= cur.last_batch_id:
+                abandon()
+                return -1
+            intact = all(
+                self._table_read_set(cur, t) == self._table_read_set(snap, t)
+                for t in tables
             )
-        self._maybe_checkpoint(snap.version + 1)
-        self._maybe_auto_compact(spark, table)
-        return snap.version + 1
+            if not (intact and self._try_write_commit(cur.version + 1, actions)):
+                abandon()
+                raise CommitConflictError(
+                    f"concurrent commit changed {sorted(set(tables))} "
+                    f"during {operation!r}; re-run the transaction"
+                )
+            version = cur.version + 1
+        self._maybe_checkpoint(version)
+        for t in dict.fromkeys(tables):
+            self._maybe_auto_compact(spark, t)
+        return version
 
     def _table_read_set(self, snap: _Snapshot, table: str) -> tuple:
         """Everything a staged write against ``snap`` depends on for
@@ -1772,6 +1836,51 @@ class DeltaLogFormat(TableFormat):
         self._abandon(staged["adds"])
         self._abandon_cdc(staged["cdc_adds"])
         self._abandon_dv(staged["dv_paths"])
+
+    def _probe_touched(
+        self,
+        spark: SparkSession,
+        table: str,
+        schema: StructType,
+        mapping: dict[str, str],
+        active: dict,
+        candidates: dict,
+        cols: list[str],
+        narrow,
+        operation: str,
+    ) -> tuple[list[str], DataFrame]:
+        """Exact touched-file set of a DML write: read ``cols`` (logical
+        names) of the candidate files with input_file_name(), keep the
+        rows ``narrow`` selects (merge: a key semi-join; delete/update:
+        the row condition), and return the distinct files holding one —
+        relativised to the data dir and validated against ``active`` —
+        plus the collected probe frame."""
+        probe = (
+            narrow(
+                spark.read.schema(self._physicalize(schema, mapping))
+                .option("basePath", os.path.join(self.data_dir, table))
+                .parquet(*[os.path.join(self.data_dir, p) for p in candidates])
+                .select(
+                    *[F.col(mapping.get(c, c)).alias(c) for c in cols],
+                    F.input_file_name().alias("_f"),
+                )
+            )
+            .select("_f")
+            .distinct()
+        )
+        touched = [
+            os.path.relpath(_uri_to_local(r["_f"]), self.data_dir)
+            .replace(os.sep, "/")
+            for r in probe.collect()
+        ]
+        bad = [p for p in touched if p not in active]
+        if bad:
+            raise ValueError(
+                f"{operation} planning produced touched path {bad[0]!r} "
+                f"that is not an active file of {table!r} — path "
+                "normalization bug or concurrent layout change"
+            )
+        return touched, probe
 
     def _stage_merge(
         self,
@@ -1829,16 +1938,10 @@ class DeltaLogFormat(TableFormat):
                 mapping, retired = self._evolve_mapping(
                     snap, table, [f.name for f in schema.fields]
                 )
-                m: dict = {
-                    "table": table,
-                    "schema_json": schema.json(),
-                    "partition_cols": snap.partition_cols.get(table) or [],
-                }
-                if mapping:
-                    m["column_mapping"] = dict(mapping)
-                if retired:
-                    m["retired_physical"] = sorted(retired)
-                meta_action = {"metaData": m}
+                meta_action = self._meta_action(
+                    table, schema, snap.partition_cols.get(table),
+                    mapping, retired,
+                )
 
         # ONE pass over the (possibly expensive) change pipeline: compact
         # to the latest row per key and pin it. The compacted frame feeds
@@ -1938,47 +2041,23 @@ class DeltaLogFormat(TableFormat):
             key_join = "skipped_single_candidate"
             self._last_key_join_plan = None
         elif candidates:
-            cand_paths = [os.path.join(self.data_dir, p) for p in candidates]
             if n_keys <= self.merge_broadcast_key_limit:
                 keyed, key_join = F.broadcast(keys), "broadcast"
             else:
                 # backfill-scale change sets must not be collected to the
                 # driver: hash-shuffle both sides on the pk instead
                 keyed, key_join = keys.hint("shuffle_hash"), "shuffle_hash"
-            probe = (
-                spark.read.schema(self._physicalize(schema, mapping))
-                .option("basePath", os.path.join(self.data_dir, table))
-                .parquet(*cand_paths)
-                .select(
-                    *[
-                        F.col(mapping.get(c, c)).alias(c)
-                        for c in pk_cols
-                    ],
-                    F.input_file_name().alias("_f"),
-                )
-                .join(keyed, on=pk_cols, how="left_semi")
-                .select("_f")
-                .distinct()
+            touched, probe = self._probe_touched(
+                spark, table, schema, mapping, active, candidates, pk_cols,
+                lambda rows: rows.join(keyed, on=pk_cols, how="left_semi"),
+                "merge",
             )
-            touched_abs = [r["_f"] for r in probe.collect()]
             try:
                 self._last_key_join_plan = (
                     probe._jdf.queryExecution().executedPlan().toString()
                 )
             except Exception:
                 self._last_key_join_plan = None
-            touched = [
-                os.path.relpath(_uri_to_local(f), self.data_dir)
-                .replace(os.sep, "/")
-                for f in touched_abs
-            ]
-            bad = [p for p in touched if p not in active]
-            if bad:
-                raise ValueError(
-                    f"merge planning produced touched path {bad[0]!r} that "
-                    f"is not an active file of {table!r} — path "
-                    "normalization bug or concurrent layout change"
-                )
         self.last_merge_stats = {
             "active": len(active),
             "candidates": len(candidates),
@@ -2033,11 +2112,13 @@ class DeltaLogFormat(TableFormat):
                 # PHYSICAL names so the read path's anti-join (which
                 # runs pre-rename, in physical space) is rename-proof.
                 dv_keys_df = self._to_physical(keys, mapping)
-                dv_paths = self._write_dv_files(
+                dv_paths = self._write_side_files(
+                    self.dv_dir,
                     table,
                     dv_keys_df.coalesce(1)
                     if n_keys <= self.merge_broadcast_key_limit
                     else dv_keys_df,
+                    "dv",
                 )
         else:
             # (3-cow) rewrite of touched rows + the changes (the pinned
@@ -2063,14 +2144,9 @@ class DeltaLogFormat(TableFormat):
             # compaction — NOT the raw input change frame, which may
             # contain no-ops); diffing touched-old vs the state JUST
             # COMMITTED is exact because untouched files are identical on
-            # both sides. Reading the committed files back — instead of
-            # re-executing the lazy merge plan — guarantees the change
-            # feed matches the committed bytes even when the input change
-            # frame is non-deterministic (ADVICE r7, delta_log.py:812).
-            # For MoR the new touched-region state is (old rows minus the
-            # delete keys) ∪ the added rows — all committed bytes.
-            from cdc_init_spark.streaming.apply import diff_snapshots
-
+            # both sides. For MoR the new touched-region state is (old
+            # rows minus the delete keys) ∪ the added rows — all
+            # committed bytes.
             new_region = self._read_adds(spark, table, adds, schema, mapping)
             if dv_paths:
                 # dv key files are physical-named; rename to logical for
@@ -2090,17 +2166,10 @@ class DeltaLogFormat(TableFormat):
                 new_region = old_rows.join(
                     dv_keys, on=pk_cols, how="left_anti"
                 ).unionByName(new_region)
-            cdc_adds = self._write_cdc_files(
-                table, diff_snapshots(old_rows, new_region, pk_cols), mapping
+            cdc_adds, cdc_actions = self._capture_cdc(
+                table, old_rows, new_region, pk_cols, mapping
             )
-            # marker: CDF was captured for this table in this commit
-            # (present even when the diff is empty, so the stream reader
-            # can distinguish "no logical change" from "CDF not enabled");
-            # pk_cols records the key vocabulary the diff was taken
-            # under — the stored files are a valid fast-path CDC read
-            # only for the same keys
-            actions.append({"cdcMeta": {"table": table, "pk_cols": pk_cols}})
-            actions.extend({"cdc": a} for a in cdc_adds)
+            actions.extend(cdc_actions)
         if strategy == "mor":
             actions.extend(
                 {"dv": {"table": table, "path": p,
@@ -2234,9 +2303,12 @@ class DeltaLogFormat(TableFormat):
             prune_ranges[column] = (plo, phi)
         # ranges arrive logical; file stats are physical-named
         mapping = dict(snap.mappings.get(table, {}) or {})
-        candidates = self._prune_files_by_ranges(
-            active, {mapping.get(c, c): r for c, r in prune_ranges.items()}
-        )
+        phys_ranges = {mapping.get(c, c): [r] for c, r in prune_ranges.items()}
+        candidates = {
+            p: a
+            for p, a in active.items()
+            if _file_intersects_ranges(a.get("stats") or {}, phys_ranges)
+        }
         # the full row condition: ranges AND residual, NULL = no match
         cond = F.lit(True)
         for column, (lo, hi) in predicates.items():
@@ -2248,37 +2320,16 @@ class DeltaLogFormat(TableFormat):
             cond = cond & F.expr(where)
         cond = F.coalesce(cond, F.lit(False))
         # (2) exact touch set — only candidate files holding a match
+        op = "update" if set_exprs else "delete"
         touched: list[str] = []
         if candidates:
-            probe = (
-                spark.read.schema(self._physicalize(schema, mapping))
-                .option("basePath", os.path.join(self.data_dir, table))
-                .parquet(*[os.path.join(self.data_dir, p) for p in candidates])
-                .select(
-                    *[
-                        F.col(mapping.get(f.name, f.name)).alias(f.name)
-                        for f in schema.fields
-                    ],
-                    F.input_file_name().alias("_f"),
-                )
-                .filter(cond)
-                .select("_f")
-                .distinct()
+            touched, _ = self._probe_touched(
+                spark, table, schema, mapping, active, candidates,
+                [f.name for f in schema.fields],
+                lambda rows: rows.filter(cond), op,
             )
-            touched = [
-                os.path.relpath(_uri_to_local(r["_f"]), self.data_dir)
-                .replace(os.sep, "/")
-                for r in probe.collect()
-            ]
-            bad_paths = [p for p in touched if p not in active]
-            if bad_paths:
-                raise ValueError(
-                    f"rewrite planning produced touched path "
-                    f"{bad_paths[0]!r} that is not an active file of "
-                    f"{table!r}"
-                )
         self.last_rewrite_stats = {
-            "op": "update" if set_exprs else "delete",
+            "op": op,
             "active": len(active),
             "candidates": len(candidates),
             "touched": len(touched),
@@ -2324,58 +2375,23 @@ class DeltaLogFormat(TableFormat):
             table, new_region, spec or None, mapping=mapping
         )
         cdc_adds: list[dict] = []
-        actions: list[dict] = [
-            {"commitInfo": {"operation": self.last_rewrite_stats["op"]}}
-        ]
+        actions: list[dict] = []
         if self.enable_cdf and pk_cols:
-            from cdc_init_spark.streaming.apply import diff_snapshots
-
             committed = self._read_adds(spark, table, adds, schema, mapping)
-            cdc_adds = self._write_cdc_files(
-                table, diff_snapshots(old_rows, committed, pk_cols), mapping
+            cdc_adds, actions = self._capture_cdc(
+                table, old_rows, committed, pk_cols, mapping
             )
-            actions.append({"cdcMeta": {"table": table, "pk_cols": pk_cols}})
-            actions.extend({"cdc": a} for a in cdc_adds)
         actions.extend(
             {"remove": {"table": table, "path": p}} for p in touched
         )
         actions.extend({"add": a} for a in adds)
-        actions.append(
-            {"txn": {"batch_id": batch_id if batch_id is not None
-                     else snap.last_batch_id}}
+        staged = {
+            "actions": actions, "adds": adds, "cdc_adds": cdc_adds,
+            "dv_paths": [],
+        }
+        return self._commit_staged(
+            spark, snap, op, [table], [staged], batch_id
         )
-
-        def _dv_state(s: _Snapshot) -> dict:
-            return {
-                p: (info["cols"], sorted(info["applies_to"]))
-                for p, info in s.dvs.get(table, {}).items()
-            }
-
-        if not self._try_write_commit(snap.version + 1, actions):
-            cur = self._snapshot()
-            if (
-                set(cur.adds.get(table, {})) == set(active)
-                and _dv_state(cur) == _dv_state(snap)
-                and (cur.partition_cols.get(table) or []) == spec
-                and cur.schemas.get(table) == snap.schemas.get(table)
-                and cur.constraints.get(table, {})
-                == snap.constraints.get(table, {})
-                and self._mapping_state(cur, table)
-                == self._mapping_state(snap, table)
-                and (batch_id is None or batch_id > cur.last_batch_id)
-            ):
-                if self._try_write_commit(cur.version + 1, actions):
-                    self._maybe_checkpoint(cur.version + 1)
-                    self._maybe_auto_compact(spark, table)
-                    return cur.version + 1
-            self._abandon(adds)
-            self._abandon_cdc(cdc_adds)
-            raise CommitConflictError(
-                f"concurrent commit changed {table!r}; re-run the rewrite"
-            )
-        self._maybe_checkpoint(snap.version + 1)
-        self._maybe_auto_compact(spark, table)
-        return snap.version + 1
 
     # -- file skipping on read ----------------------------------------------
 
@@ -2400,36 +2416,6 @@ class DeltaLogFormat(TableFormat):
             spark, table, {column: (lo, hi)}, version=version
         )
 
-    @staticmethod
-    def _prune_files_by_ranges(
-        active: dict, predicates: dict[str, tuple]
-    ) -> dict:
-        """Files whose footer [min,max] stats COULD intersect every
-        predicate range — the shared file-skipping kernel of
-        read_where_all and the delete/update rewrite planner. A file
-        with no stats for a column is kept (the residual filter
-        decides); incomparable stats forms likewise."""
-        kept = {}
-        for p, a in active.items():
-            st = a.get("stats") or {}
-            keep = True
-            for column, (lo, hi) in predicates.items():
-                fmin = (st.get("min") or {}).get(column)
-                fmax = (st.get("max") or {}).get(column)
-                if fmin is None or fmax is None:
-                    continue
-                try:
-                    if (hi is not None and fmin > hi) or (
-                        lo is not None and fmax < lo
-                    ):
-                        keep = False
-                        break
-                except TypeError:
-                    pass
-            if keep:
-                kept[p] = a
-        return kept
-
     def read_where_all(
         self,
         spark: SparkSession,
@@ -2448,9 +2434,12 @@ class DeltaLogFormat(TableFormat):
         snap = self._snapshot(version)
         active = snap.adds.get(table, {})
         mapping = snap.mappings.get(table, {}) or {}
-        kept = self._prune_files_by_ranges(
-            active, {mapping.get(c, c): r for c, r in predicates.items()}
-        )
+        phys_ranges = {mapping.get(c, c): [r] for c, r in predicates.items()}
+        kept = {
+            p: a
+            for p, a in active.items()
+            if _file_intersects_ranges(a.get("stats") or {}, phys_ranges)
+        }
         df = self._read_files(spark, snap, table, kept)
         for column, (lo, hi) in predicates.items():
             if lo is not None:
@@ -3415,18 +3404,9 @@ class Transaction:
         adds = self.fmt._write_data_files(
             table, df, spec, self.snap.constraints.get(table, {}), mapping
         )
-        actions: list[dict] = []
-        if (
-            table not in self.snap.schemas
-            or self.fmt._schema_change(self.snap.schemas[table], df)
-            or (spec or []) != (self.snap.partition_cols.get(table) or [])
-        ):
-            actions.append(
-                self.fmt._meta_action(table, df, spec, mapping, retired)
-            )
-        for p in self.snap.adds.get(table, {}):
-            actions.append({"remove": {"table": table, "path": p}})
-        actions.extend({"add": a} for a in adds)
+        actions = self.fmt._overwrite_actions(
+            self.snap, table, df, spec, mapping, retired, adds
+        )
         self._staged.append(
             {"actions": actions, "adds": adds, "cdc_adds": [],
              "dv_paths": []}
@@ -3434,10 +3414,6 @@ class Transaction:
         self._tables.append(table)
         self._op_names.append(f"overwrite({table})")
         return self
-
-    def _abandon_all(self) -> None:
-        for s in self._staged:
-            self.fmt._abandon_staged(s)
 
     def commit(self, batch_id: int | None = None) -> int:
         """Land every staged op as ONE version. Returns the committed
@@ -3451,44 +3427,7 @@ class Transaction:
         if not self._staged:
             raise ValueError("empty transaction: stage at least one op")
         self._finished = True
-        snap = self.snap
-        if batch_id is not None and batch_id <= snap.last_batch_id:
-            self._abandon_all()
-            return -1
-        actions: list[dict] = [
-            {"commitInfo": {
-                "operation": f"txn[{', '.join(self._op_names)}]"}}
-        ]
-        for s in self._staged:
-            actions.extend(s["actions"])
-        actions.append(
-            {"txn": {"batch_id": batch_id if batch_id is not None
-                     else snap.last_batch_id}}
-        )
-
-        def _after(version: int) -> int:
-            self.fmt._maybe_checkpoint(version)
-            for t in dict.fromkeys(self._tables):
-                self.fmt._maybe_auto_compact(self.spark, t)
-            return version
-
-        if self.fmt._try_write_commit(snap.version + 1, actions):
-            return _after(snap.version + 1)
-        cur = self.fmt._snapshot()
-        if batch_id is not None and batch_id <= cur.last_batch_id:
-            # lost to our own replay twin: the batch is already durable
-            self._abandon_all()
-            return -1
-        if all(
-            self.fmt._table_read_set(cur, t)
-            == self.fmt._table_read_set(snap, t)
-            for t in self._tables
-        ):
-            # winner touched other tables only: every read set is intact
-            if self.fmt._try_write_commit(cur.version + 1, actions):
-                return _after(cur.version + 1)
-        self._abandon_all()
-        raise CommitConflictError(
-            f"concurrent commit changed {sorted(set(self._tables))}; "
-            "re-run the transaction"
+        return self.fmt._commit_staged(
+            self.spark, self.snap, f"txn[{', '.join(self._op_names)}]",
+            self._tables, self._staged, batch_id,
         )

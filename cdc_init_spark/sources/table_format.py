@@ -2,25 +2,18 @@
 continuous-aggregate pipeline writes through (VERDICT r5 "Next round"
 item 7).
 
-``streaming/apply.py`` reconstructs the ACID-table semantics the engine
-needs (versioned snapshots readers never see half-written, replay
-idempotence keyed on the micro-batch id, version time travel) on raw
-parquet + an atomically-renamed marker. This module names that contract
-as an ABC so a REAL table format is a drop-in:
-
-- ``VersionedParquetFormat`` is the existing layout, verbatim — v{n}/
-  directories plus a ``_VERSION`` JSON marker swapped with ``os.replace``
-  (atomic on POSIX), exactly what ``continuous_agg_step`` wrote inline
-  before r6. The apply/time-travel/IVM pytest suite (tests/test_apply.py)
-  runs UNCHANGED through it, which is the proof the extraction is
-  faithful.
-- A Delta/Iceberg binding implements the same four operations with the
-  format's native transaction log (``commit`` → one transactional
-  multi-table write carrying the batch id in commit metadata, ``read(
-  version=...)`` → native time travel) — none of the pipeline code
-  changes. The binding is not vendored here (no delta-spark/iceberg jars
-  in this environment); the semantics it must satisfy are pinned by the
-  suite above.
+``streaming/apply.py`` needs ACID-table semantics (versioned snapshots
+readers never see half-written, replay idempotence keyed on the
+micro-batch id, version time travel). This module names that contract
+as an ABC; ``sources/delta_log.DeltaLogFormat`` is its implementation
+(an immutable-file + action-log format with O(delta) commits), and the
+apply/time-travel/IVM pytest suite (tests/test_apply.py) pins the
+semantics. A Delta/Iceberg binding would implement the same operations,
+plus the multi-table ``transaction`` (keyed merge + overwrite in one
+version) that ``continuous_agg_step`` commits through, with the
+format's native transaction log (``commit`` → one transactional
+multi-table write carrying the batch id in commit metadata,
+``read(version=...)`` → native time travel).
 
 Contract (what any implementation MUST guarantee):
 1. **Atomic visibility** — ``read`` never observes a partially-committed
@@ -37,8 +30,6 @@ Contract (what any implementation MUST guarantee):
 
 from __future__ import annotations
 
-import json
-import os
 from abc import ABC, abstractmethod
 
 from pyspark.sql import DataFrame, SparkSession
@@ -72,64 +63,3 @@ class TableFormat(ABC):
     def has_table(self, table: str, version: int | None = None) -> bool:
         """Whether ``table`` exists at the (latest or given) version —
         lets a first commit add tables v0 didn't carry (e.g. the agg)."""
-
-
-class VersionedParquetFormat(TableFormat):
-    """The repo's file-store implementation: ``{root}/v{n}/{table}``
-    parquet directories plus a ``{root}/_VERSION`` JSON marker
-    (``{"version": n, "batch_id": b}``) renamed into place with
-    ``os.replace`` — readers resolve the marker first, so they only ever
-    see versions whose every table finished writing. Single-writer by
-    contract (the streaming query's foreachBatch), matching the
-    reference's one-consumer-per-topic shape (topic_store.clj:13-16)."""
-
-    def __init__(self, root: str) -> None:
-        self.root = root
-
-    # -- marker ------------------------------------------------------------
-
-    def _marker(self) -> dict:
-        with open(os.path.join(self.root, "_VERSION")) as f:
-            return json.load(f)
-
-    def _swap_marker(self, version: int, batch_id: int) -> None:
-        marker = os.path.join(self.root, "_VERSION")
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"version": version, "batch_id": batch_id}, f)
-        os.replace(tmp, marker)  # atomic: readers see old or new, never half
-
-    # -- TableFormat -------------------------------------------------------
-
-    def init(self, tables: dict[str, DataFrame]) -> None:
-        os.makedirs(self.root, exist_ok=True)
-        for name, df in tables.items():
-            df.write.mode("overwrite").parquet(
-                os.path.join(self.root, "v0", name)
-            )
-        self._swap_marker(0, -1)
-
-    def commit(self, tables: dict[str, DataFrame], batch_id: int) -> bool:
-        state = self._marker()
-        if batch_id <= state["batch_id"]:
-            return False  # replayed batch: its version is already durable
-        nxt = state["version"] + 1
-        for name, df in tables.items():
-            df.write.mode("overwrite").parquet(
-                os.path.join(self.root, f"v{nxt}", name)
-            )
-        self._swap_marker(nxt, batch_id)
-        return True
-
-    def read(
-        self, spark: SparkSession, table: str, version: int | None = None
-    ) -> DataFrame:
-        v = self._marker()["version"] if version is None else version
-        return spark.read.parquet(os.path.join(self.root, f"v{v}", table))
-
-    def latest_version(self) -> int:
-        return self._marker()["version"]
-
-    def has_table(self, table: str, version: int | None = None) -> bool:
-        v = self._marker()["version"] if version is None else version
-        return os.path.isdir(os.path.join(self.root, f"v{v}", table))

@@ -175,22 +175,20 @@ def incremental_agg(
 
 
 def _format_for(table_dir_or_format):
-    """str → the default VersionedParquetFormat; a TableFormat passes
-    through — the seam where a Delta/Iceberg binding drops in."""
-    from cdc_init_spark.sources.table_format import (
-        TableFormat,
-        VersionedParquetFormat,
-    )
+    """str → a ``DeltaLogFormat`` rooted at that path; a TableFormat
+    passes through — the seam where a Delta/Iceberg binding drops in."""
+    from cdc_init_spark.sources.delta_log import DeltaLogFormat
+    from cdc_init_spark.sources.table_format import TableFormat
 
     if isinstance(table_dir_or_format, TableFormat):
         return table_dir_or_format
-    return VersionedParquetFormat(table_dir_or_format)
+    return DeltaLogFormat(table_dir_or_format)
 
 
 def init_continuous_agg(base: DataFrame, table_dir) -> None:
     """Write version 0 of a continuously-maintained table: the base
-    snapshot plus its marker. Pair with ``continuous_agg_step``.
-    ``table_dir`` is a path (versioned-parquet layout) or any
+    snapshot. Pair with ``continuous_agg_step``. ``table_dir`` is a
+    path (opened as a ``DeltaLogFormat``) or any
     ``sources.table_format.TableFormat``."""
     _format_for(table_dir).init({"base": base})
 
@@ -206,31 +204,23 @@ def continuous_agg_step(
 ):
     """foreachBatch function maintaining a continuously-updated base
     snapshot AND its per-group aggregate from a CDC change stream — the
-    streaming materialized view built from apply_changes +
-    incremental_agg.
+    streaming materialized view built from incremental_agg plus a keyed
+    merge.
 
-    All storage goes through ``sources.table_format.TableFormat``
-    (``table_dir`` may be a path — the default versioned-parquet
-    layout — or any TableFormat instance, e.g. a Delta/Iceberg
-    binding): each micro-batch commits {base, agg} as ONE atomic
-    version; a REPLAYED batch (same batch_id after checkpoint
-    recovery) is a committed no-op instead of advancing twice —
-    at-least-once delivery collapses to effectively-once state.
+    ``table_dir`` is a path (opened as a ``DeltaLogFormat``) or a
+    format instance exposing the multi-table ``transaction``. Each
+    micro-batch is ONE transaction: the change batch is MERGED into
+    ``base`` (rewriting only the files holding touched keys — O(change
+    set), never O(table)) while the group-sized ``agg`` is overwritten
+    in the same log version, so no reader can ever observe base ahead
+    of agg. A REPLAYED batch (same batch_id after checkpoint recovery)
+    is a committed no-op instead of advancing twice — at-least-once
+    delivery collapses to effectively-once state.
 
     Per-batch work: change-batch-sized joins plus one read of the
     current base — the aggregate itself updates with touched-keys-sized
     arithmetic (incremental_agg), demonstrating log-proportional
-    maintenance end to end.
-
-    Formats exposing a multi-table ``transaction`` (DeltaLogFormat,
-    VERDICT r8 item 5) get the stronger WRITE shape too: the change
-    batch is MERGED into ``base`` (rewriting only the files holding
-    touched keys — O(change set), never O(table)) while the group-sized
-    ``agg`` is overwritten IN THE SAME log version, so no reader can
-    ever observe base ahead of agg and the base's write amplification
-    stops scaling with table size. Formats without transactions keep
-    the portable full-overwrite commit (same atomicity, O(table)
-    writes)."""
+    maintenance end to end."""
     fmt = _format_for(table_dir)
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
@@ -252,24 +242,15 @@ def continuous_agg_step(
             type_col,
             base_agg=prior_agg,
         )
-        # the commit (either arm) is the replay gate: a replayed
-        # batch_id is a committed no-op (the reads above were wasted
-        # work only in the rare recovery replay — checking first would
-        # race the marker swap in formats without snapshot-isolated
-        # readers)
-        if hasattr(fmt, "transaction"):
-            txn = fmt.transaction(spark)
-            txn.merge(
-                "base", batch_df, pk_cols, order_col=order_col,
-                type_col=type_col,
-            )
-            txn.overwrite("agg", agg)
-            txn.commit(batch_id)
-        else:
-            merged = apply_changes(
-                base, batch_df, pk_cols, order_col, type_col
-            )
-            fmt.commit({"base": merged, "agg": agg}, batch_id)
+        # the commit is the replay gate: a replayed batch_id is a
+        # committed no-op (the reads above are wasted work only in the
+        # rare recovery replay)
+        txn = fmt.transaction(spark)
+        txn.merge(
+            "base", batch_df, pk_cols, order_col=order_col, type_col=type_col
+        )
+        txn.overwrite("agg", agg)
+        txn.commit(batch_id)
 
     return step
 

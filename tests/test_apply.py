@@ -151,6 +151,7 @@ def test_continuous_agg_maintains_base_and_agg(spark, tmp_path):
         "pk long, grp string, v double",
     )
     init_continuous_agg(base, table_dir)
+    assert os.path.isdir(os.path.join(table_dir, "_log"))  # a DeltaLogFormat
 
     def write_batch(name, rows):
         with open(f"{src}/{name}", "w") as f:
@@ -236,18 +237,16 @@ def test_diff_snapshots_inverts_apply(spark):
 
 def _formats():
     from cdc_init_spark.sources.delta_log import DeltaLogFormat
-    from cdc_init_spark.sources.table_format import VersionedParquetFormat
 
-    return [VersionedParquetFormat, DeltaLogFormat]
+    return [DeltaLogFormat]
 
 
 @pytest.mark.parametrize("fmt_cls", _formats())
 def test_table_format_adapter_contract(spark, tmp_path, fmt_cls):
-    """TableFormat (r6): BOTH implementations — the versioned-parquet
-    copy-per-version layout and the log-structured DeltaLogFormat —
-    satisfy the transactional contract the Delta/Iceberg seam requires:
-    multi-table atomic commits, monotonic versions with time travel,
-    replay idempotence keyed on batch_id, has_table across versions."""
+    """TableFormat (r6): every implementation satisfies the
+    transactional contract the Delta/Iceberg seam requires: multi-table
+    atomic commits, monotonic versions with time travel, replay
+    idempotence keyed on batch_id, has_table across versions."""
     fmt = fmt_cls(str(tmp_path / "t"))
     b0 = spark.createDataFrame([(1, 10.0)], "pk long, v double")
     fmt.init({"base": b0})
@@ -274,9 +273,8 @@ def test_table_format_adapter_contract(spark, tmp_path, fmt_cls):
 @pytest.mark.parametrize("fmt_cls", _formats())
 def test_continuous_agg_accepts_table_format_instance(spark, tmp_path, fmt_cls):
     """The IVM pipeline runs against a TableFormat INSTANCE (the
-    drop-in seam) — both the copy-per-version layout and the
-    log-structured DeltaLogFormat — one batch through foreachBatch's
-    step function directly."""
+    drop-in seam) — one batch through foreachBatch's step function
+    directly."""
     from cdc_init_spark.streaming.apply import (
         continuous_agg_step,
         init_continuous_agg,

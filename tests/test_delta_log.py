@@ -277,10 +277,41 @@ def test_merge_replay_and_conflict_surface(spark, tmp_path):
         fmt.merge(spark, "a", ch, ["id"], batch_id=99)
     fmt._try_write_commit = real_try
 
+    # the race is lost to a commit carrying the SAME batch id (a replay
+    # twin): the batch is already durable, so merge and delete return
+    # -1 exactly as the up-front replay check does, and leave no staged
+    # data or change-feed files behind
+    cdf = DeltaLogFormat(str(tmp_path / "cdf"), enable_cdf=True)
+    cdf.init({"a": spark.createDataFrame([(1, 1.0)], "id long, v double")})
+    cdf_try = cdf._try_write_commit
+
+    def twin_wins(batch_id):
+        def attempt(version, actions):
+            cdf._try_write_commit = cdf_try
+            cdf_try(version, [{"txn": {"batch_id": batch_id}}])
+            return cdf_try(version, actions)  # fails: version taken
+        return attempt
+
+    def parquet_files(d):
+        return sorted(
+            os.path.relpath(os.path.join(r, f), d)
+            for r, _, fs in os.walk(d) for f in fs if f.endswith(".parquet")
+        )
+
+    cdf._try_write_commit = twin_wins(99)
+    assert cdf.merge(spark, "a", ch, ["id"], batch_id=99) == -1
+    cdf._try_write_commit = twin_wins(100)
+    assert cdf.delete(spark, "a", {"id": (1, 1)}, pk_cols=["id"],
+                      batch_id=100) == -1
+    assert cdf.latest_version() == 2
+    assert parquet_files(cdf.data_dir) == sorted(cdf._snapshot().adds["a"])
+    assert parquet_files(cdf.cdc_dir) == []
+    assert _rows(cdf.read(spark, "a")) == [(1, 1.0)]
+
 
 def test_commit_overwrites_only_named_tables(spark, tmp_path):
     """Multi-table commit scope: committing {agg} leaves base's data
-    files untouched (the O(delta) win over VersionedParquetFormat,
+    files untouched (the O(delta) win over a copy-per-version layout,
     which copies every table every version)."""
     fmt = DeltaLogFormat(str(tmp_path / "t"))
     fmt.init({"base": spark.createDataFrame([(1, 1.0)], "pk long, v double")})
@@ -673,6 +704,17 @@ def test_history_restore_and_cdc_read(spark, tmp_path):
     fmt.vacuum(horizon=4, retention_s=0.0)
     with pytest.raises(ValueError, match="vacuum"):
         fmt.restore(2)
+
+    # every DML verb names its commit: predicate update/delete, the
+    # merge-on-read merge and a full overwrite
+    assert fmt.update(spark, "a", {"v": "v + 1.0"}, {"id": (2, 2)}) == 5
+    assert fmt.delete(spark, "a", {"id": (3, 3)}) == 6
+    assert fmt.merge(spark, "a", ch, ["id"], batch_id=1, strategy="mor") == 7
+    assert fmt.commit({"a": fmt.read(spark, "a")}, batch_id=2) is True
+    ops = [(h["version"], h["operation"]) for h in fmt.history()[:4]]
+    assert ops == [(8, "overwrite"), (7, "merge-mor"), (6, "delete"),
+                   (5, "update")]
+    assert _rows(fmt.read(spark, "a")) == [(2, 21.0)]
 
 
 # -- round-7 hardening (ADVICE r6): vacuum safety, URI decoding, loud

@@ -737,7 +737,10 @@ def test_graph_broadcast_gate_paths_agree(spark, monkeypatch):
     def hinted(df) -> bool:
         return "ResolvedHint" in df._jdf.queryExecution().analyzed().toString()
 
-    # auto gate ON at the default limit (6 nodes ≤ 1M): hint present
+    # auto gate ON at the default limit (6 nodes ≤ 1M): hint present.
+    # Clear any ambient override so this case really runs the defaults.
+    monkeypatch.delenv("SPARK_GRAFT_GRAPH_BCAST_NODES", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_GRAPH_BCAST_EDGES", raising=False)
     k_auto = khop_distances(edges, seeds, k=2)
     b_auto = bellman_ford(wedges, seeds, k=2)
     l_auto = label_propagation(edges, iters=2)
